@@ -13,6 +13,22 @@ import org.apache.spark.sql.SparkSession
   * reclaim note in `time`).
   */
 object Bench {
+  /** Bench consumers parse the final JSON line out of a ~2000-char tail
+    * capture of the output; 1700 leaves 300 chars of margin under it. */
+  val LineBudget = 1700
+
+  /** `render` of the most rows of `qs` (by name, slowest kept first) that
+    * fits in `budget` chars; if even one row overflows (a long sf path),
+    * the line carries no per-query rows at all. */
+  def fitLine(qs: Seq[(String, (Double, Double, Double))], budget: Int)(
+      render: Seq[(String, (Double, Double, Double))] => String): String = {
+    val bySlowest = qs.sortBy(-_._2._1)
+    (qs.size to 0 by -1).iterator
+      .map(keep => render(bySlowest.take(keep).sortBy(_._1)))
+      .find(_.length <= budget)
+      .getOrElse(render(Nil))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -217,17 +233,7 @@ object Bench {
         .mkString("{", ",", "}")
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","cpu_total":${r3(cpuTotal)},"gc_total":${r3(gcTotal)},"cores":$cores,"load_avg":${r3(loadAvg)},"n_total":${results.size},"n_queries":${qs.size},"queries":$m,"sf":"$sfDir"}"""
     }
-    // The driver parses the final JSON line out of a ~2000-char tail
-    // capture; 1900 keeps the whole line inside that window (with newline
-    // margin) while carrying ~40+ of the slowest queries instead of 29.
-    val budget = 1900
-    var line = render(results)
-    if (line.length > budget) {
-      val bySlowest = results.sortBy(-_._2._1)
-      var keep = bySlowest.size
-      while (keep > 1 && render(bySlowest.take(keep).sortBy(_._1)).length > budget) keep -= 1
-      line = render(bySlowest.take(keep).sortBy(_._1))
-    }
+    val line = fitLine(results, LineBudget)(render)
     // Machine-parseable artifact with the FULL per-query table (the
     // stdout line is budgeted to the driver's tail window and may drop
     // fast queries): one JSON object at a stable path in the repo root.

@@ -27,26 +27,39 @@ object Tables {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  /** Footer-inferred schema per table path, computed once per JVM: every
-    * `spark.read.parquet(path)` without an explicit schema runs parquet
-    * footer inference at plan time, and a 233-query bench session makes
-    * ~1200 `t()` calls (queries × tables × warmup + 2 passes) — each one
-    * re-reading the footer of an immutable file (r18 verdict task #6, the
-    * batch-tail planning floor). METADATA cache only (a StructType per
-    * path), never data or results: every query still computes from the
-    * parquet bytes. Keyed on the full path, so different SF dirs (and any
-    * test fixture at its own temp path) each infer once; the gate's
-    * testdata is immutable for a session's lifetime, which is what makes
-    * the cache sound. `ts` physical-form variance (nanos-as-long vs µs
-    * timestamp) is per-file and therefore per-path — captured correctly. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  /** Footer-inferred schema per table path, recomputed only when the path
+    * changes: every `spark.read.parquet(path)` without an explicit schema
+    * runs parquet footer inference at plan time, and a 233-query bench
+    * session makes ~1200 `t()` calls (queries × tables × warmup + 2
+    * passes), each of which would re-read the same footer. METADATA cache
+    * only (a StructType per path), never data or results: every query
+    * still computes from the parquet bytes. An entry is valid for the
+    * path's modification time, read through the session's Hadoop
+    * `FileSystem` like the scan itself: a table rewritten at the same path
+    * (a new file, or a directory whose entries were replaced) gets a new
+    * time and is inferred again. `ts` physical-form variance
+    * (nanos-as-long vs µs timestamp) is per-file and therefore captured. */
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Long, org.apache.spark.sql.types.StructType)]()
+
+  /** Latest modification time of `path` and, for a directory, of its
+    * direct entries (a part file rewritten in place keeps the
+    * directory's own time). */
+  private def modifiedAt(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val st = fs.getFileStatus(p)
+    if (!st.isDirectory) st.getModificationTime
+    else fs.listStatus(p).foldLeft(st.getModificationTime)(_ max _.getModificationTime)
+  }
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     ensureConf(spark)
     val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val mtime = modifiedAt(spark, path)
+    val (_, schema) = schemaCache.compute(path, (p, cached) =>
+      if (cached != null && cached._1 == mtime) cached
+      else (mtime, spark.read.parquet(p).schema))
     spark.read.schema(schema).parquet(path)
   }
 

@@ -28,8 +28,23 @@ import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
   * `sun.net.httpserver.maxReqTime`/`maxRspTime` set (they default to
   * unlimited) or behind a proxy that enforces client timeouts, or a
   * stalling client (slowloris) parks the edge on a blocking read.
+  *
+  * No-delay: the JDK server writes a reply's headers and its body as two
+  * segments. Under Nagle's algorithm the body then waits for the ACK of
+  * the headers, which a client on a keep-alive connection delays by about
+  * 40 ms, so every back-to-back request on that connection pays the
+  * stall. Loading this object therefore sets the JDK property
+  * `sun.net.httpserver.nodelay=true` (unless the user already set it,
+  * either way), and the JDK then turns on TCP_NODELAY for every HTTP and
+  * HTTPS connection it accepts. The JDK reads that property once per JVM,
+  * when the JVM creates its first `HttpServer`: in a JVM that created a
+  * JDK `HttpServer` before this object loaded, the edge keeps Nagle — set
+  * `-Dsun.net.httpserver.nodelay=true` at launch there.
   */
 object HttpIngress {
+
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
 
   /** Largest accepted request body — one hostile client must not be able
     * to balloon edge memory (requests above it get 413, unbuffered).
@@ -84,6 +99,7 @@ object HttpIngress {
                       reply: HttpIngress.Reply) {
     private val buffer = new IngressBuffer[HttpRequest](spark, channel, writerId, enc)
     private val ids = new AtomicLong(0)
+    private val refused = new AtomicLong(0)
 
     def port: Int = server.getAddress.getPort
 
@@ -106,6 +122,7 @@ object HttpIngress {
         // read itself (slowloris) — that needs a request-time limit
         // (JDK sun.net.httpserver.maxReqTime at launch, or a fronting
         // proxy), not more code here; see the class scaladoc.
+        refused.incrementAndGet()
         try {
           val resp = "payload too large".getBytes("UTF-8")
           exchange.sendResponseHeaders(413, resp.length.toLong)
@@ -144,6 +161,12 @@ object HttpIngress {
 
     /** Records accepted but not yet flushed (ops/metrics surface). */
     def pendingCount: Int = buffer.size
+
+    /** Requests accepted (buffered for the channel) since start. */
+    def acceptedCount: Long = ids.get()
+
+    /** Requests refused with 413 (never buffered) since start. */
+    def refusedCount: Long = refused.get()
 
     def stop(): Unit = server.stop(0)
   }

@@ -52,6 +52,7 @@ object QuicIngress {
     private val buffer = new IngressBuffer[QuicRequest](spark, channel, writerId, enc)
     private val ids = new AtomicLong(0)
     private val stopped = new AtomicBoolean(false)
+    private val refused = new AtomicLong(0)
 
     def port: Int = endpoint.port
 
@@ -63,24 +64,32 @@ object QuicIngress {
           // serving every later connection
           try listener.accept(timeoutMs = 200).foreach { s =>
             // TLS mode: handshake first (throws on an untrusting or
-            // plaintext peer — caught below, request never buffered)
-            val (body, respond) = tls match {
-              case Some(ctx) =>
-                val t = QuicTls.server(s, ctx)
-                (t.readAll(), (b: Array[Byte]) => t.write(b))
-              case None =>
-                (s.readAll(), (b: Array[Byte]) => s.write(b))
-            }
-            buffer.add(QuicRequest(ids.getAndIncrement(), listener.domain,
-              s.streamId, s.conn.remote.toString, body))
-            // the request is already buffered; a throwing reply policy must
-            // still answer the peer stream or the client hangs to timeout
-            val resp =
-              try reply(body)
+            // plaintext peer). A stream whose handshake or read throws is
+            // refused: counted, never buffered, and the loop goes on.
+            val received =
+              try Some(tls match {
+                case Some(ctx) =>
+                  val t = QuicTls.server(s, ctx)
+                  (t.readAll(), (b: Array[Byte]) => t.write(b))
+                case None =>
+                  (s.readAll(), (b: Array[Byte]) => s.write(b))
+              })
               catch { case scala.util.control.NonFatal(_) =>
-                "error: reply policy failed".getBytes("UTF-8")
+                refused.incrementAndGet(); None
               }
-            respond(resp) // synchronous response, same stream
+            received.foreach { case (body, respond) =>
+              buffer.add(QuicRequest(ids.getAndIncrement(), listener.domain,
+                s.streamId, s.conn.remote.toString, body))
+              // the request is already buffered; a throwing reply policy
+              // must still answer the peer stream or the client hangs to
+              // timeout
+              val resp =
+                try reply(body)
+                catch { case scala.util.control.NonFatal(_) =>
+                  "error: reply policy failed".getBytes("UTF-8")
+                }
+              respond(resp) // synchronous response, same stream
+            }
           } catch { case _: InterruptedException => return; case _: Exception => () }
         }
       }, s"quic-ingress-${listener.domain}")
@@ -96,6 +105,12 @@ object QuicIngress {
 
     /** Records accepted but not yet flushed (ops/metrics surface). */
     def pendingCount: Int = buffer.size
+
+    /** Streams accepted (buffered for the channel) since start. */
+    def acceptedCount: Long = ids.get()
+
+    /** Streams refused since start: their handshake or read threw. */
+    def refusedCount: Long = refused.get()
 
     /** Stops the accept loop; closes the endpoint only if this ingress
       * created it — a SHARED endpoint serves other domains whose

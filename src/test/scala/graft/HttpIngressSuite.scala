@@ -56,10 +56,52 @@ class HttpIngressSuite extends SparkSpec {
       val tooBig = post(new Array[Byte](HttpIngress.MaxBodyBytes + 1))
       assert(tooBig.statusCode() == 413, s"got ${tooBig.statusCode()}")
       assert(ingress.pendingCount == 0, "oversized request was buffered")
+      assert(ingress.refusedCount == 1 && ingress.acceptedCount == 0)
       // the edge still serves after the refusal
       assert(post("ok".getBytes("UTF-8")).statusCode() == 202)
       assert(ingress.flush() == 1)
+      assert(ingress.refusedCount == 1 && ingress.acceptedCount == 1)
     } finally ingress.stop()
+  }
+
+  test("back-to-back requests on one keep-alive connection are not delayed by Nagle") {
+    val reg = new ChannelRegistry(spark, tmpDir("httpnodelay"))
+    val ch = reg.create("nodelay_in", HttpIngress.schema)
+    val ingress = HttpIngress.start(spark, ch)
+    val sock = new java.net.Socket("127.0.0.1", ingress.port)
+    try {
+      sock.setTcpNoDelay(true)
+      val out = sock.getOutputStream
+      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(sock.getInputStream))
+      def readLine(): String = {
+        val b = new StringBuilder
+        var c = in.read()
+        while (c != '\n') {
+          assert(c >= 0, "edge closed the connection")
+          if (c != '\r') b += c.toChar
+          c = in.read()
+        }
+        b.toString
+      }
+      val body = "event".getBytes("UTF-8")
+      val t0 = System.nanoTime()
+      (0 until 50).foreach { i =>
+        out.write((s"POST /ingest/$i HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+          s"Content-Length: ${body.length}\r\n\r\n").getBytes("ISO-8859-1"))
+        out.write(body)
+        out.flush()
+        assert(readLine().startsWith("HTTP/1.1 202"))
+        val headers = Iterator.continually(readLine()).takeWhile(_.nonEmpty).toSeq
+        assert(headers.exists(_.equalsIgnoreCase("content-length: 8")), headers)
+        val reply = new Array[Byte](8)
+        in.readFully(reply)
+        assert(new String(reply, "UTF-8") == "accepted")
+      }
+      val ms = (System.nanoTime() - t0) / 1e6
+      // with Nagle on, each reply body waits ~40 ms for a delayed ACK
+      assert(ms < 1000, f"50 back-to-back requests took $ms%.0f ms")
+      assert(ingress.flush() == 50)
+    } finally { sock.close(); ingress.stop() }
   }
 
   test("rest-api parity: body-validating reply policy answers 200/401/400") {

@@ -11,6 +11,12 @@ class QuicSuite extends SparkSpec {
 
   private def s(bytes: Array[Byte]) = new String(bytes, UTF_8)
 
+  /** Waits up to 10 s for an edge counter the accept thread updates. */
+  private def await(cond: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 10000L * 1000000L
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(20)
+  }
+
   test("handshake + bidirectional stream round-trip (S4)") {
     val server = QuicLite.endpoint()
     val client = QuicLite.endpoint()
@@ -260,20 +266,24 @@ class QuicSuite extends SparkSpec {
     // the client trusts a DIFFERENT self-signed cert → cert path fails
     val clientCtx = graft.net.Tls.sslContext(
       graft.net.Tls.selfSignedKeystore(tmpDir("quictls-cli"), pw), pw)
-    val server = QuicLite.endpoint()
+    val reg = new ChannelRegistry(spark, tmpDir("quictlsrefuse"))
+    val ch = reg.create("quic_refuse_in", QuicIngress.schema)
+    val ingress = QuicIngress.start(spark, ch, "refuse.test", tls = Some(serverCtx))
     val client = QuicLite.endpoint()
     try {
-      val listener = server.bind("refuse.test")
-      val serverThread = new Thread(() => listener.accept(5000).foreach { st =>
-        try graft.net.QuicTls.server(st, serverCtx)
-        catch { case _: Exception => () } // refusal surfaces client-side too
-      })
-      serverThread.setDaemon(true); serverThread.start()
-      val conn = client.connect("127.0.0.1", server.port, "refuse.test")
+      val conn = client.connect("127.0.0.1", ingress.port, "refuse.test")
       intercept[javax.net.ssl.SSLException] {
         graft.net.QuicTls.client(conn, clientCtx)
       }
-    } finally { server.close(); client.close() }
+      // the edge counts the failed server-side handshake and keeps serving
+      await(ingress.refusedCount > 0)
+      assert(ingress.refusedCount == 1 && ingress.acceptedCount == 0)
+      val t = graft.net.QuicTls.client(conn, serverCtx)
+      t.write("trusted".getBytes(UTF_8))
+      assert(s(t.readAll()) == "accepted")
+      assert(ingress.flush() == 1)
+      assert(ingress.refusedCount == 1 && ingress.acceptedCount == 1)
+    } finally { ingress.stop(); client.close() }
   }
 
   test("TLS QUIC edge → channel end-to-end; plaintext client never lands") {
@@ -296,6 +306,8 @@ class QuicSuite extends SparkSpec {
       plain.write("cleartext sneak".getBytes(UTF_8))
       intercept[QuicLite.QuicError] { plain.readAll(1500) }
       assert(ingress.flush() == 1)
+      await(ingress.refusedCount > 0)
+      assert(ingress.acceptedCount == 1 && ingress.refusedCount == 1)
       val rows = ch.read()
         .select(expr("cast(body as string)").as("body")).as[String].collect()
       assert(rows.toSeq == Seq("encrypted-record"))
